@@ -19,14 +19,16 @@ records) is never dropped and never fully crossed: it is sub-keyed by a
 coauthor-MinHash block so the n² is per block, with `mega_key_stats` as the
 lineage surface for which keys took that path (see pair_scores). Label
 propagation with the pointer-doubling compression step converges in
-O(log d) iterations for diameter d; each iteration is two shuffles; we
-localCheckpoint every few iterations to truncate lineage.
+O(log d) iterations for diameter d; each iteration is two shuffles and
+ends in a localCheckpoint, so the plan stays the same size every iteration.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .operators.dedup import band_pairs
 
 
 def _jaccard(a, b):
@@ -84,41 +86,21 @@ def author_records_from_raw(raw: DataFrame) -> DataFrame:
     )
 
 
-def _feature_sides(recs: DataFrame):
-    """Project the feature columns into the two join sides of the pairwise
-    scorer (src/dst naming)."""
-    a = recs.select(
-        F.col("author_key"),
-        F.col("doc_id").alias("src"),
-        F.col("coauthors").alias("co_a"),
-        F.col("mesh").alias("mesh_a"),
-        F.col("title_tokens").alias("ti_a"),
-        F.col("affiliation_tokens").alias("af_a"),
-    )
-    b = recs.select(
-        F.col("author_key"),
-        F.col("doc_id").alias("dst"),
-        F.col("coauthors").alias("co_b"),
-        F.col("mesh").alias("mesh_b"),
-        F.col("title_tokens").alias("ti_b"),
-        F.col("affiliation_tokens").alias("af_b"),
-    )
-    return a, b
+_FEATURES = ("coauthors", "mesh", "title_tokens", "affiliation_tokens")
 
 
 def _score_pairs(pairs: DataFrame) -> DataFrame:
     """Append the four Jaccard feature scores + the F6 geometric-mean simm
-    to a joined pair frame carrying co_a..af_b.
+    to a joined pair frame carrying ``<feature>_a`` / ``<feature>_b``.
 
     F6 (/root/reference/Author2PMID.groovy:30-40): simm = geometric mean of
     the NONZERO features only — pow(prod(nonzero), 1/count(nonzero)), 0 when
     all four are zero. Computed as exp(mean(ln x)) over the filtered array:
     pure Column algebra, stays inside codegen.
     """
-    co = _jaccard(F.col("co_a"), F.col("co_b"))
-    me = _jaccard(F.col("mesh_a"), F.col("mesh_b"))
-    ti = _jaccard(F.col("ti_a"), F.col("ti_b"))
-    af = _jaccard(F.col("af_a"), F.col("af_b"))
+    co, me, ti, af = (
+        _jaccard(F.col(f"{c}_a"), F.col(f"{c}_b")) for c in _FEATURES
+    )
     nonzero = F.filter(
         F.array(F.col("coauthorscore"), F.col("meshscore"),
                 F.col("titlescore"), F.col("affiliationscore")),
@@ -147,22 +129,19 @@ def _score_pairs(pairs: DataFrame) -> DataFrame:
 def _block_expr(n_bands: int, blocking_col: str = "coauthors"):
     """Blocking keys for a mega author_key record: one 1-permutation MinHash
     of the blocking token set per band (band b salts the hash with b, so the
-    bands are independent permutations). A record with an EMPTY blocking set
-    gets a per-(doc, band) unique key — it can never meet a partner, i.e. it
-    degrades to a singleton rather than joining a catch-all mega block."""
+    bands are independent permutations). A record with an EMPTY blocking
+    set gets NULL keys, which ``band_pairs`` never matches — it degrades to
+    a singleton rather than joining a catch-all mega block."""
     # NB: the per-band lambda must stay single-parameter — F.transform treats
     # a 2-arg lambda as (element, index), so a `_b=b` default would bind the
     # array index, not the band salt, collapsing every band into one block
     def band(b):
         return lambda c: F.xxhash64(F.lit(b), c)
 
-    return F.array(*[
-        F.coalesce(
-            F.array_min(F.transform(F.col(blocking_col), band(b))),
-            F.xxhash64(F.lit(-1 - b), F.col("doc_id")),
-        )
+    return [
+        F.array_min(F.transform(F.col(blocking_col), band(b)))
         for b in range(n_bands)
-    ])
+    ]
 
 
 def mega_key_stats(records: DataFrame, max_group_size: int = 10000) -> DataFrame:
@@ -198,147 +177,64 @@ def pair_scores(
     coauthors, which is exactly the reference's strongest attach signal
     (coauthorscore > 0). Records with no coauthors degrade to singletons.
     A block that is itself over ``max_group_size`` (a hub coauthor) is cut,
-    never partially exploded — surface those via ``mega_key_stats`` lineage.
+    never partially exploded; a pair that also shares a later, smaller
+    block is still scored there (``band_pairs``' cap) — surface mega keys
+    via ``mega_key_stats`` lineage.
     """
     wcount = F.count("*").over(Window.partitionBy("author_key"))
     sized = records.withColumn("_gs", wcount)
-    small = sized.filter(F.col("_gs") <= max_group_size).drop("_gs")
-    a, b = _feature_sides(small)
+    small = sized.filter(F.col("_gs") <= max_group_size)
+    a, b = (
+        small.select(
+            "author_key", F.col("doc_id").alias(i),
+            *[F.col(c).alias(f"{c}_{s}") for c in _FEATURES],
+        )
+        for i, s in (("src", "a"), ("dst", "b"))
+    )
     scored = _score_pairs(a.join(b, "author_key").filter(F.col("src") < F.col("dst")))
     if n_blocking_bands <= 0:
         return scored
 
-    # ---- mega-key path (r6 restructure) ----------------------------------
-    # Two independent wins over the r5 candidates->distinct->two-feature-join
-    # chain:
-    # 1. FIRST-SHARED-BAND dedup: each side of the block self-join carries
-    #    its full band array, and a pair colliding in several bands is kept
-    #    only in the lowest shared band — a narrow in-stage filter replaces
-    #    the .distinct() shuffle of the multi-band candidate stream.
-    # 2. PROFILE dictionary-encoding: the four Jaccards + simm are pure
-    #    functions of the FEATURE VALUES, and real author records repeat
-    #    feature vectors heavily (same coauthor list, same mesh set), so
-    #    score each key's DISTINCT (coauthors, mesh, title, affiliation)
-    #    profile pair once and attach by profile id — the expensive array
-    #    math runs on |profile pairs| rows, not |record pairs|, and the
-    #    record-pair stream stays narrow (ids only) end to end. Worst case
-    #    (all profiles unique) degrades to exactly the old per-pair cost.
-    # The scorer is shared with the small-group path, so scores stay
-    # bit-identical (pure function of the same feature arrays).
-    mega = sized.filter(F.col("_gs") > max_group_size).drop("_gs")
-    pid = F.xxhash64("coauthors", "mesh", "title_tokens", "affiliation_tokens")
-    recs = mega.withColumn("_pid", pid)
-    blocked = recs.withColumn(
-        "_bands", _block_expr(n_blocking_bands, blocking_col)
-    ).select(
-        "author_key", "doc_id", "_pid", "_bands",
-        F.posexplode("_bands").alias("_bi", "_block"),
+    # ---- mega-key path ---------------------------------------------------
+    # PROFILE dictionary-encoding: the four Jaccards + simm are pure
+    # functions of the FEATURE VALUES, and real author records repeat
+    # feature vectors heavily (same coauthor list, same mesh set), so each
+    # key's DISTINCT profile pair is scored once and attached by profile id —
+    # the array math runs on |profile pairs| rows, and the record-pair
+    # stream stays ids only. Worst case (all profiles unique) is the plain
+    # per-pair cost. The scorer is shared with the small-group path, so
+    # scores stay bit-identical.
+    mega = sized.filter(F.col("_gs") > max_group_size)
+    recs = mega.withColumn("_pid", F.xxhash64(*_FEATURES))
+    bands = _block_expr(n_blocking_bands, blocking_col)
+    cand = band_pairs(
+        recs, "doc_id", bands, group_cols=["author_key"], carry=["_pid"],
+        max_bucket=max_group_size,
     )
-    bcount = F.count("*").over(Window.partitionBy("author_key", "_block"))
-    blocked = (
-        blocked.withColumn("_bs", bcount)
-        .filter(F.col("_bs") <= max_group_size)
-        .drop("_bs")
+    # the same banding replayed over distinct profiles: a profile's keys ARE
+    # its records' keys, and a profile bucket never holds more rows than the
+    # record bucket it mirrors, so every profile pair behind a record pair
+    # of `cand` survives here too. Records sharing one profile attach to the
+    # profile's pair with itself.
+    prof = recs.select("author_key", "_pid", *_FEATURES).distinct()
+    ppairs = band_pairs(
+        prof, "_pid", bands, group_cols=["author_key"], carry=_FEATURES,
+        max_bucket=max_group_size,
+    ).withColumnsRenamed({"a_id": "src", "b_id": "dst"})
+    same = prof.select(
+        "author_key", F.col("_pid").alias("src"), F.col("_pid").alias("dst"),
+        *[F.col(c).alias(f"{c}_{s}") for s in "ab" for c in _FEATURES],
     )
-    # explicit width: the banded table is only ~bands x |mega| SMALL rows,
-    # so AQE's size-based coalescing would happily run the whole n²/block
-    # pair EXPANSION in one or two tasks (partition sizing sees join INPUT
-    # bytes, not output rows). A user repartition is exempt from AQE
-    # coalescing and (author_key, _block) ⊆ join keys, so the self-join
-    # reuses this exchange on both sides without adding one.
-    blocked = blocked.repartition(
-        records.sparkSession.sparkContext.defaultParallelism,
-        "author_key", "_block",
+    pscored = _score_pairs(ppairs.unionByName(same)).withColumnsRenamed(
+        {"src": "_pa", "dst": "_pb"}
     )
-    a = blocked.select(
-        "author_key", "_bi", "_block",
-        F.col("doc_id").alias("src"),
-        F.col("_pid").alias("_pa"),
-        F.col("_bands").alias("_ba"),
-    )
-    b = blocked.select(
-        "author_key", "_bi", "_block",
-        F.col("doc_id").alias("dst"),
-        F.col("_pid").alias("_pb"),
-        F.col("_bands").alias("_bb"),
-    )
-    # scalar first-shared-band predicate: OR over the (fixed, small) band
-    # count of indexed compares — higher-order exists/zip_with/slice runs
-    # INTERPRETED per row, which at candidate-stream volume costs more
-    # than the shuffle it replaces (same lesson as hamming_pairs, r6)
-    earlier_band_matched = F.lit(False)
-    for _j in range(n_blocking_bands - 1):
-        earlier_band_matched = earlier_band_matched | (
-            (F.col("_bi") > _j) & (F.col("_ba")[_j] == F.col("_bb")[_j])
-        )
-    cand = (
-        a.join(b, ["author_key", "_bi", "_block"])
-        .filter(F.col("src") < F.col("dst"))
-        .filter(~earlier_band_matched)
-        .select("author_key", "src", "dst", "_pa", "_pb")
-    )
-    # profile-pair score table from PROFILE-level banding (a tiny replay of
-    # the same banding over distinct profiles — a profile's band vector IS
-    # its records' band vector when the blocking set is non-empty, and
-    # empty-set records can never pair with anyone) — so this branch never
-    # touches the record-pair stream, sidestepping a second execution of
-    # the block self-join that a candidates.distinct() would have forced.
-    # Ordered pairs incl. self-pairs, since cand's (_pa, _pb) follows
-    # src < dst doc order, not profile order; a superset is harmless (the
-    # attach join below is inner).
-    prof = recs.select(
-        "author_key", "_pid",
-        "coauthors", "mesh", "title_tokens", "affiliation_tokens",
-    ).distinct()
-
-    def _pband(b_):
-        return lambda c: F.xxhash64(F.lit(b_), c)
-
-    profile_bands = F.array(*[
-        F.array_min(F.transform(F.col(blocking_col), _pband(b_)))
-        for b_ in range(n_blocking_bands)
-    ])
-    pblocked = (
-        prof.filter(F.size(F.col(blocking_col)) > 0)
-        .withColumn("_bands", profile_bands)
-        .select(
-            "author_key", "_pid", "_bands",
-            "coauthors", "mesh", "title_tokens", "affiliation_tokens",
-            F.posexplode("_bands").alias("_bi", "_block"),
-        )
-    )
-    ppa = pblocked.select(
-        "author_key", "_bi", "_block",
-        F.col("_pid").alias("_pa"), F.col("_bands").alias("_ba"),
-        F.col("coauthors").alias("co_a"), F.col("mesh").alias("mesh_a"),
-        F.col("title_tokens").alias("ti_a"),
-        F.col("affiliation_tokens").alias("af_a"),
-    )
-    ppb = pblocked.select(
-        "author_key", "_bi", "_block",
-        F.col("_pid").alias("_pb"), F.col("_bands").alias("_bb"),
-        F.col("coauthors").alias("co_b"), F.col("mesh").alias("mesh_b"),
-        F.col("title_tokens").alias("ti_b"),
-        F.col("affiliation_tokens").alias("af_b"),
-    )
-    ppairs = (
-        ppa.join(ppb, ["author_key", "_bi", "_block"])
-        .filter(~earlier_band_matched)
-        .select(
-            "author_key",
-            F.col("_pa").alias("src"), F.col("_pb").alias("dst"),
-            "co_a", "mesh_a", "ti_a", "af_a",
-            "co_b", "mesh_b", "ti_b", "af_b",
-        )
-    )
-    pscored = _score_pairs(ppairs).select(
+    mega_scored = cand.select(
         "author_key",
-        F.col("src").alias("_pa"), F.col("dst").alias("_pb"),
-        "coauthorscore", "meshscore", "titlescore", "affiliationscore", "simm",
-    )
-    mega_scored = cand.join(
-        pscored, ["author_key", "_pa", "_pb"]
-    ).select(
+        F.col("a_id").alias("src"),
+        F.col("b_id").alias("dst"),
+        F.least("_pid_a", "_pid_b").alias("_pa"),
+        F.greatest("_pid_a", "_pid_b").alias("_pb"),
+    ).join(pscored, ["author_key", "_pa", "_pb"]).select(
         "author_key", "src", "dst",
         "coauthorscore", "meshscore", "titlescore", "affiliationscore", "simm",
     )
@@ -378,7 +274,6 @@ def connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     max_iter: int = 50,
-    checkpoint_every: int = 5,
     driver_threshold: int = 100_000,
     n_edges: int | None = None,
 ) -> DataFrame:
@@ -432,7 +327,9 @@ def connected_components(
     if vertices is None:
         vertices = sym.select(F.col("src").alias("id")).distinct()
 
-    if n_edges <= driver_threshold:
+    def union_find(rows, verts: DataFrame) -> DataFrame:
+        """Driver union-find over collected edge rows, broadcast back onto
+        ``verts`` (vertices without an edge label themselves)."""
         parent: dict = {}
 
         def find(x):
@@ -441,7 +338,7 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for r in (probe_rows if probe_rows is not None else e.distinct().collect()):
+        for r in rows:
             a, b = r["src"], r["dst"]
             parent.setdefault(a, a)
             parent.setdefault(b, b)
@@ -449,14 +346,16 @@ def connected_components(
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
         labels = [(k, find(k)) for k in parent]
-        spark = edges.sparkSession
-        if labels:
-            lmap = spark.createDataFrame(labels, ["id", "component"])
-        else:
-            lmap = spark.createDataFrame([], vertices.select(
-                F.col("id"), F.col("id").alias("component")).schema)
-        return vertices.join(F.broadcast(lmap), "id", "left").select(
+        schema = e.select(F.col("src").alias("id"), F.col("src").alias("component")).schema
+        lmap = edges.sparkSession.createDataFrame(labels, schema)
+        return verts.join(F.broadcast(lmap), "id", "left").select(
             "id", F.coalesce("component", F.col("id")).alias("component")
+        )
+
+    if n_edges <= driver_threshold:
+        return union_find(
+            probe_rows if probe_rows is not None else e.distinct().collect(),
+            vertices,
         )
     # ---- star-contraction pre-pass (r6) ----------------------------------
     # One round of f(v) = min(v ∪ N(v)) contraction before the generic loop:
@@ -507,32 +406,7 @@ def connected_components(
 
     if n2 <= driver_threshold:
         # the contracted graph fits the driver: finish with union-find
-        parent = {}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in contracted.collect():
-            a, b = r["src"], r["dst"]
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        labels = [(k, find(k)) for k in parent]
-        spark = edges.sparkSession
-        if labels:
-            lmap = spark.createDataFrame(labels, ["id", "component"])
-        else:
-            lmap = spark.createDataFrame([], cverts.select(
-                F.col("id"), F.col("id").alias("component")).schema)
-        comp = cverts.join(F.broadcast(lmap), "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
-        out = _unwind(comp)
+        out = _unwind(union_find(contracted.collect(), cverts))
         sym.unpersist()
         return out
     # ---- generic O(log d) loop on the contracted graph -------------------
@@ -577,10 +451,11 @@ def connected_components(
                 ).alias("component"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            new_full = new_full.localCheckpoint(eager=True)
-        else:
-            new_full = new_full.persist()
+        # every step is built from the previous step's checkpoint: `stepped`
+        # references `labels` twice and `new_full` references `stepped`
+        # twice, so carrying the lineage would grow the plan ~4x per
+        # iteration
+        new_full = new_full.localCheckpoint(eager=True)
         # convergence check straight off the carried old label — labels only
         # ever decrease, so "any row where new != old" needs no old-vs-new
         # join (one full shuffle join per iteration saved)

@@ -9,7 +9,8 @@ bit-for-bit, and all expressed as native Column algebra (zero Python UDFs):
 - minhash_signatures / minhash_lsh_pairs: k permutations via seeded portable
   hash, banding -> bucket self-join -> candidate pairs (the scale path: the
   shingle self-join above is quadratic on hot shingles; LSH bounds work to
-  band-bucket collisions).
+  band-bucket collisions). Every banding self-join goes through
+  ``band_pairs``.
 - simhash64: 64-bit simhash from token hashes, via bit-position explode +
   weighted majority (pure SQL algebra, oracle-checkable).
 
@@ -240,6 +241,113 @@ def minhash_signatures(
     )
 
 
+def band_pairs(
+    df: DataFrame,
+    id_col: str,
+    bands,
+    group_cols=(),
+    carry=(),
+    max_bucket: int | None = None,
+    partitions: int | None = None,
+) -> DataFrame:
+    """Pairs of rows that share a bucket in at least one band — the one
+    band -> bucket self-join behind every banding operator (MinHash LSH,
+    Hamming banding, the mega-key author blocking and its profile replay).
+
+    ``bands``: one bucket-key Column per band; a NULL key never matches.
+    Two rows pair when they agree on ``group_cols`` and hold the same
+    non-NULL key in some band. Returns ``(*group_cols, a_id, b_id,
+    <c>_a..., <c>_b...)`` for ``c`` in ``carry``: each pair exactly once,
+    ``a_id < b_id``.
+
+    First-shared-band dedup: a pair colliding in several bands meets once
+    per band in the self-join (an exact duplicate meets in all of them).
+    Both sides carry the full key array, so the row from band i is kept
+    only when no band j < i also has equal keys — the kept set is exactly
+    the distinct pair set, with no ``.distinct()`` shuffle of the
+    multiplied stream. The predicate ``OR_j (_bi > j AND _ba[j] = _bb[j])``
+    is a fixed-width scalar expression and stays inside whole-stage
+    codegen; the higher-order form (exists/zip_with) runs interpreted per
+    row and measured 28 s vs 2 s on the bar-image aHash input.
+
+    ``max_bucket``: a (group, band, bucket) holding more rows than this is
+    cut, never partially exploded, so one bucket's join costs at most
+    ``max_bucket``² rows (the per-bucket bound of worst-case-optimal
+    similarity joins). The cut drops the hot bucket's rows and sets every
+    member's key for that band to NULL, so the predicate above only sees
+    surviving bands: a pair is kept iff it shares a bucket that survived
+    the cap, in the lowest such band — a hot lowest band does not hide a
+    cool later one. Two windows do it, one per (group, band, bucket) and
+    one per (group, row); input already partitioned by the group (the
+    mega-key path) needs no exchange for either. ``None`` adds no stage.
+
+    ``partitions``: the banded table is small in bytes while each bucket's
+    join output is quadratic, so AQE's size-based coalescing would run the
+    whole expansion in one or two tasks. A user repartition on the full
+    join key is exempt from coalescing and satisfies the self-join on both
+    sides (one exchange, reused). None widens to defaultParallelism; 0
+    skips the repartition — better for mostly-unique keys, where the
+    expansion is about linear and the exchange is pure latency.
+    """
+    group_cols, carry, n = list(group_cols), list(carry), len(bands)
+    banded = df.select(
+        *group_cols, F.col(id_col).alias("_id"), *carry,
+        F.array(*bands).alias("_bands"),
+    ).select("*", F.posexplode("_bands").alias("_bi", "_bk"))
+    if max_bucket is not None:
+        bucket = Window.partitionBy(*group_cols, "_bi", "_bk")
+        row = Window.partitionBy(*group_cols, "_id")
+        banded = (
+            banded.withColumn("_hot", F.count("*").over(bucket) > max_bucket)
+            .withColumn(
+                "_hot_bands",
+                F.collect_set(F.when(F.col("_hot"), F.col("_bi"))).over(row),
+            )
+            .filter(~F.col("_hot"))
+            .withColumn("_bands", F.array(*[
+                F.when(~F.array_contains("_hot_bands", j), F.col("_bands")[j])
+                for j in range(n)
+            ]))
+            .drop("_hot", "_hot_bands")
+        )
+    banded = banded.filter(F.col("_bk").isNotNull())
+    keys = [*group_cols, "_bi", "_bk"]
+    if partitions != 0:
+        banded = banded.repartition(
+            partitions or df.sparkSession.sparkContext.defaultParallelism, *keys
+        )
+
+    def side(s):
+        return banded.select(
+            *keys, F.col("_id").alias(f"{s}_id"), F.col("_bands").alias(f"_b{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    earlier = F.lit(False)
+    for j in range(n - 1):
+        earlier = earlier | (
+            (F.col("_bi") > j)
+            & F.coalesce(F.col("_ba")[j] == F.col("_bb")[j], F.lit(False))
+        )
+    return (
+        side("a").join(side("b"), keys)
+        .filter((F.col("a_id") < F.col("b_id")) & ~earlier)
+        .select(
+            *group_cols, "a_id", "b_id",
+            *[f"{c}_{s}" for s in "ab" for c in carry],
+        )
+    )
+
+
+def _minhash_bands(num_hashes: int, bands: int):
+    """One bucket key per band: the band's slice of the signature."""
+    rows_per_band = num_hashes // bands
+    return [
+        F.slice(F.col("sig"), b * rows_per_band + 1, rows_per_band)
+        for b in range(bands)
+    ]
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -251,67 +359,15 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """LSH candidates: split the signature into ``bands`` bands of
     num_hashes/bands rows; docs colliding on any full band are candidates.
-    Returns distinct (a_id, b_id). Scale path for near-dedup: work is
-    proportional to bucket collisions, not doc pairs. ``shingles_df``:
-    optional pre-computed (doc_id, shingle) table (see
-    ``minhash_signatures``)."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, id_col, text_col, n, num_hashes, shingles_df)
-    banded = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("sig")[b * rows_per_band + r].cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # explicit width: the banded table is tiny in bytes while bucket
-    # collisions expand quadratically — keep AQE from coalescing the
-    # expansion narrow (see hamming_pairs)
-    banded = banded.repartition(
-        sig.sparkSession.sparkContext.defaultParallelism, "band", "bucket"
-    )
-    a = banded.select(
-        F.col("doc_id").alias("a_id"), F.col("sig").alias("_siga"),
-        "band", "bucket",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("b_id"), F.col("sig").alias("_sigb"),
-        "band", "bucket",
-    )
-    # FIRST-SHARED-BAND dedup instead of .distinct() (r6): a pair whose
-    # signatures agree on several bands used to enter the exchange once per
-    # band; both sides carry the signature array, so "some earlier band
-    # also agrees" is a scalar in-stage predicate (array indexing stays in
-    # whole-stage codegen) and the kept set is exactly the distinct set.
-    def _band_eq(j: int):
-        cond = F.col("_siga")[j * rows_per_band] == F.col("_sigb")[j * rows_per_band]
-        for r in range(1, rows_per_band):
-            cond = cond & (
-                F.col("_siga")[j * rows_per_band + r]
-                == F.col("_sigb")[j * rows_per_band + r]
-            )
-        return cond
+    Returns distinct (a_id, b_id) from ``band_pairs``. Work is proportional
+    to bucket collisions, not doc pairs. ``shingles_df``: optional
+    pre-computed (doc_id, shingle) table (see ``minhash_signatures``).
 
-    earlier = F.lit(False)
-    for j in range(bands - 1):
-        earlier = earlier | ((F.col("band") > j) & _band_eq(j))
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(~earlier)
-        .select("a_id", "b_id")
-    )
+    Recall is about the Jaccard J itself, not the textbook S-curve
+    1 - (1 - J^r)^b: the affine permutations (h1 + i·h2) make the slots of
+    a signature, and so its bands, strongly dependent."""
+    sig = minhash_signatures(docs, id_col, text_col, n, num_hashes, shingles_df)
+    return band_pairs(sig, "doc_id", _minhash_bands(num_hashes, bands))
 
 
 def neardup_text_scalable(
@@ -339,11 +395,12 @@ def neardup_text_scalable(
 
     Output is a SUBSET of ``ngram_jaccard_pairs(same args)`` — equal values
     on every emitted pair, missing only pairs LSH never proposed. Candidate
-    recall follows the standard S-curve P[candidate] =
-    1 - (1 - j^(num_hashes/bands))^bands: at 8 hashes / 4 bands (rows=2),
-    j=0.8 gives ~0.98, j=0.5 gives ~0.68 — raise bands (or lower rows per
-    band) to push recall at the cost of more candidates (measured on the
-    sf0.001/sf0.01 documents in tests/test_dedup.py).
+    recall is about the Jaccard j itself, NOT the textbook S-curve
+    1 - (1 - j^(num_hashes/bands))^bands: all slots of a signature are
+    (h1 + i·h2) mod p over one md5 per shingle, so one shingle tends to
+    hold the minimum in every band and the bands are strongly dependent —
+    a pair is missed about as often as 1 - j. More bands buy little; the
+    hash family is kept because the DuckDB oracles replay it.
 
     Plan at scale: every shuffle key is well-distributed (band buckets from
     minhash values, then doc ids); the candidate set is tiny relative to the
@@ -469,8 +526,8 @@ def neardup_signature_store(
     """Per-doc near-dup signature store row:
     ``(doc_id, buckets array<string>[bands], sh array<bigint> sorted)`` —
     everything incremental dedup needs to admit FUTURE batches without
-    ever touching this batch's text again. ``buckets[b]`` is the MinHash
-    LSH band key (identical to ``minhash_lsh_pairs`` banding); ``sh`` is
+    ever touching this batch's text again. ``buckets[b]`` is band b of
+    ``minhash_lsh_pairs`` as comma-joined values; ``sh`` is
     the doc's distinct shingle identity set under the 60-bit md5-prefix
     hash the MinHash permutations already derive (h1) — the confirm space
     of ``neardup_incremental``. Storing hashes, not shingle strings, caps
@@ -1108,85 +1165,28 @@ def hamming_pairs(
     in <= ``max_hamming`` of the low ``n_bits`` bits — the banding + XOR
     confirm shared by text SimHash (`simhash_pairs`) and perceptual image
     hashes (`multimodal.image_ahash`). Candidates collide on at least one
-    of ``bands`` exact-match bands (n_bits/bands bits each); for
-    max_hamming < bands the pigeonhole principle makes recall EXACTLY 1,
+    of ``bands`` exact-match bands (n_bits/bands bits each, ``band_pairs``);
+    for max_hamming < bands the pigeonhole principle makes recall EXACTLY 1,
     so the output equals the brute-force all-pairs scan (which is what the
-    DuckDB oracles run). Work ∝ band-bucket collisions, never n²."""
+    DuckDB oracles run). Work ∝ band-bucket collisions, never n².
+    ``expand_partitions`` is ``band_pairs``' ``partitions``: None widens the
+    join (identical signatures expand quadratically per bucket, the aHash
+    case), 0 skips the repartition (mostly-unique signatures)."""
     assert max_hamming < bands, "pigeonhole recall guarantee needs d < bands"
     assert n_bits % bands == 0, "bands must divide n_bits"
     bits = n_bits // bands
-    mask = (1 << bits) - 1
-    banded = sigs.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(sig_col).alias("_sig"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col(sig_col), b * bits)
-                    .bitwiseAND(F.lit(mask))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    # explicit width (r6): the banded table is tiny in BYTES while the
-    # bucket self-join's OUTPUT is quadratic per bucket, so AQE's
-    # size-based planning would coalesce the expansion into one or two
-    # tasks when the signature table is cached/known-small. A user
-    # repartition is exempt from coalescing and matches the join keys, so
-    # both sides reuse this exchange. ``expand_partitions``: None (default)
-    # widens to defaultParallelism — right whenever duplication is heavy
-    # (identical signatures expand quadratically per bucket, the aHash
-    # case); 0 skips the repartition — measured better for mostly-unique
-    # signature sets (text SimHash at sf0.1: 2.10s vs 2.28s) where the
-    # expansion is ~linear and the extra exchange is pure latency.
-    if expand_partitions != 0:
-        banded = banded.repartition(
-            expand_partitions
-            or sigs.sparkSession.sparkContext.defaultParallelism,
-            "band", "bucket",
-        )
-    a = banded.select(
-        F.col("doc_id").alias("a_id"), F.col("_sig").alias("_sa"),
-        "band", "bucket",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("b_id"), F.col("_sig").alias("_sb"),
-        "band", "bucket",
-    )
-    # FIRST-SHARED-BAND dedup (r6): a pair of identical-or-near signatures
-    # collides in MANY bands (an exact duplicate collides in all of them),
-    # and the old .distinct() shuffled that multiplied stream. Band j
-    # collides iff the XOR's j-th band is zero — derivable from the carried
-    # signatures with pure bit ops — so keeping only the LOWEST colliding
-    # band is a narrow in-stage filter and the exchange disappears. The
-    # kept set is exactly the old distinct set (the join key guarantees at
-    # least one colliding band per candidate row). Deliberately SCALAR
-    # arithmetic, not transform/exists: higher-order functions run
-    # interpreted per row, which at candidate-stream volume costs more
-    # than the shuffle they replace (measured 28s vs 2s on the bar-image
-    # bench); a sum of CASE terms stays inside whole-stage codegen.
-    z_terms = []
-    for j in range(bands):
-        m = mask << (j * bits)
-        if m >= 1 << 63:
-            m -= 1 << 64  # literal must be a signed 64-bit value in SQL
-        z_terms.append(
-            f"(CASE WHEN ((_sa ^ _sb) & {m}L) = 0 THEN {1 << j}L ELSE 0L END)"
-        )
-    no_earlier_band = (
-        f"((({' + '.join(z_terms)}) & (shiftleft(1L, band) - 1)) = 0)"
-    )
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(F.expr(no_earlier_band))
-        .select("a_id", "b_id", "_sa", "_sb")
+    keys = [
+        F.shiftright(F.col(sig_col), b * bits).bitwiseAND(F.lit((1 << bits) - 1))
+        for b in range(bands)
+    ]
+    cand = band_pairs(
+        sigs, id_col, keys, carry=[sig_col], partitions=expand_partitions
     )
     return cand.select(
         "a_id",
         "b_id",
-        F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("hamming"),
+        F.bit_count(F.col(f"{sig_col}_a").bitwiseXOR(F.col(f"{sig_col}_b")))
+        .alias("hamming"),
     ).filter(F.col("hamming") <= max_hamming)
 
 
@@ -1205,8 +1205,8 @@ def minhash_jaccard_estimate(
     confirm of ``neardup_text_scalable``: rank or pre-filter candidates on
     the estimate (zero additional corpus access — the signatures already
     exist) and reserve the exact confirm for the survivors. Pure column
-    algebra: candidate equi-join on (band, bucket), then one zip_with over
-    the two signature arrays.
+    algebra: the ``minhash_lsh_pairs`` candidates carrying both signatures,
+    then one zip_with over the two arrays.
 
     Calibration caveat (measured, tested): this module's permutations are
     the affine family g_i = (h1 + i·h2) from ONE md5 per shingle, so slots
@@ -1217,51 +1217,18 @@ def minhash_jaccard_estimate(
     monotone enough to RANK candidates (tested), not to report as a
     calibrated Jaccard. For calibrated estimates pay num_hashes independent
     md5s per shingle; for exact values run the confirm stage."""
-    from pyspark.storagelevel import StorageLevel
-
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(docs, id_col, text_col, n, num_hashes, shingles_df)
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)  # both join sides
-    banded = sig.select(
-        "doc_id",
-        "sig",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("sig")[b * rows_per_band + r].cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
-    a = banded.select(
-        F.col("doc_id").alias("a_id"), F.col("sig").alias("_sa"), "band", "bucket"
-    )
-    b = banded.select(
-        F.col("doc_id").alias("b_id"), F.col("sig").alias("_sb"), "band", "bucket"
-    )
+    cand = band_pairs(sig, "doc_id", _minhash_bands(num_hashes, bands), carry=["sig"])
     agree = F.size(
         F.filter(
-            F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
+            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
             lambda v: v,
         )
     )
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", "_sa", "_sb")
-        .distinct()
-        .select(
-            "a_id",
-            "b_id",
-            F.round(agree.cast("double") / num_hashes, 6).alias("est_jaccard"),
-        )
+    return cand.select(
+        "a_id",
+        "b_id",
+        F.round(agree.cast("double") / num_hashes, 6).alias("est_jaccard"),
     )
 
 

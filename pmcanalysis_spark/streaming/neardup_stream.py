@@ -91,8 +91,8 @@ def row_minhash_bands(
 ) -> DataFrame:
     """(doc_id, band, bucket) rows with the signature computed per-row:
     same shingles (distinct word n-grams), same md5-derived affine family
-    and same band-bucket format as ``dedup.minhash_signatures`` /
-    ``minhash_lsh_pairs``, but with the groupBy(doc) replaced by
+    and same bands as ``dedup.minhash_signatures`` /
+    ``minhash_lsh_pairs`` (bucket as the comma-joined band values), but with the groupBy(doc) replaced by
     array_min over the in-row shingle array — narrow, stream-safe.
     Docs with no full shingle (shorter than n tokens) emit nothing,
     matching the batch operator. ``include_shingles`` adds a ``shingles``

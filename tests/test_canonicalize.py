@@ -321,6 +321,39 @@ def test_canonicalize_authors_megakey_no_record_vanishes(spark):
     assert len({r["entity_id"] for r in out}) == 16
 
 
+def test_pair_scores_megakey_hot_lowest_band_keeps_cool_later_band(spark):
+    """Two mega-key records whose LOWEST shared band falls in a hot (over
+    the cap) block, and which also share a cool later block, are still
+    scored: the cap cuts the hot bucket, never the pair."""
+    from pmcanalysis_spark.canonicalize import pair_scores
+
+    # the blocking hashes of candidate coauthor names, band b salted with b
+    # exactly as the mega-key banding salts them
+    h = spark.createDataFrame([(f"c{i}",) for i in range(40)], "c string").select(
+        "c", *[F.xxhash64(F.lit(b), "c").alias(f"h{b}") for b in range(2)]
+    ).collect()
+    hub = min(h, key=lambda r: r.h0)  # band-0 minimum of every set holding it
+    partner = next(r for r in h if r.c != hub.c and r.h1 < hub.h1)
+    others = [r.c for r in h if r.c not in (hub.c, partner.c)]
+
+    def rec(doc, coauthors):
+        return {"doc_id": doc, "author_key": "mega", "coauthors": coauthors,
+                "mesh": [], "title_tokens": [], "affiliation_tokens": [],
+                "true_entity": None}
+
+    # 12 hub records + A + B: band-0 block {hub} holds 14 > 10 records (hot);
+    # A and B also share the band-1 block of `partner`, which holds only them
+    rows = [rec(f"H{i:02d}", [hub.c, others[i]]) for i in range(12)]
+    rows += [rec("A", [hub.c, partner.c]), rec("B", [hub.c, partner.c])]
+    got = {
+        (r["src"], r["dst"]): r["coauthorscore"]
+        for r in pair_scores(
+            spark.createDataFrame(rows, AUTHOR_RECORDS), max_group_size=10
+        ).collect()
+    }
+    assert got.get(("A", "B")) == 1.0
+
+
 def test_megakey_empty_coauthors_degrade_to_singletons(spark):
     """Mega-key records with NO coauthors can't block with anyone: they emit
     no pairs (singleton degradation documented in pair_scores) but still
@@ -350,18 +383,35 @@ def test_mega_key_stats_lineage_surface(spark):
     assert got == {"big": 15}
 
 
-def test_cc_contraction_loop_matches_driver_union_find(spark):
+def test_cc_contraction_loop_matches_driver_union_find(spark, monkeypatch):
     """r6: forcing the iterative path (star contraction + label loop,
     driver_threshold=0) must give the identical min-id components as the
     driver union-find, including a long chain (worst case for
-    contraction: shrinks by one per round, the O(log d) loop finishes)."""
+    contraction: shrinks by one per round, the O(log d) loop finishes).
+    Each iteration is built from the previous checkpoint, so the plan it
+    checkpoints stays the same size however many iterations run."""
     edges = [(i, i + 1) for i in range(1, 40)]          # chain 1..40
     edges += [(100, 101), (101, 102), (100, 102)]      # triangle
     edges += [(200 + i, 200) for i in range(1, 8)]     # star
     e = spark.createDataFrame(edges, "src long, dst long")
     fast = {r["id"]: r["component"]
             for r in connected_components(e).collect()}
+
+    plan_sizes = []
+    cls = type(e)
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plan_sizes.append(len(self._jdf.queryExecution().logical().toString()))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
     loop = {r["id"]: r["component"]
             for r in connected_components(e, driver_threshold=0).collect()}
     assert fast == loop
     assert loop[40] == 1 and loop[102] == 100 and loop[207] == 200
+    # the first iteration reads the initial labels; every later one reads
+    # the previous checkpoint and must not grow with the iteration count
+    later = plan_sizes[1:]
+    assert len(later) >= 3, plan_sizes
+    assert max(later) <= 1.1 * min(later), plan_sizes

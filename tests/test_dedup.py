@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import pytest
+
 from pmcanalysis_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -843,21 +845,65 @@ def test_minhash_signatures_duplicate_invariant_raw_path(spark):
     assert raw == dis
 
 
-def test_hamming_pairs_first_band_dedup_on_duplicate_heavy_input(spark):
-    """r6: with many IDENTICAL signatures (collide in every band), the
-    first-shared-band filter must still emit each qualifying pair exactly
-    once — the set a brute-force all-pairs scan produces."""
+# band_pairs inputs: (group, id, per-band keys) rows and the bucket cap
+_UNIQUE_KEYS = (
+    [("g", i, [100 * b + i for b in range(4)]) for i in range(12)]
+    + [("g", 20, [0, 999, 2, 998]), ("g", 21, [997, 999, 996, 998])]
+)
+# identical signatures collide in every band: 16 bands of 4 bits, as
+# hamming_pairs(bands=16) keys them
+_DUPLICATE_HEAVY = [
+    ("g", i, [(s >> (4 * b)) & 15 for b in range(16)])
+    for i, s in [(i, 0b1111000) for i in range(6)]
+    + [(i, 0b1111001) for i in range(6, 10)]
+]
+# band 0 bucket 7 is hot in group g (5 rows > 3) but cool in group h;
+# 1-2 and 3-4 also share a cool later band; NULL keys never match
+_HOT_BUCKET = [
+    ("g", 1, [7, 8, 10]), ("g", 2, [7, 8, 10]), ("g", 3, [7, 31, 9]),
+    ("g", 4, [7, 41, 9]), ("g", 5, [7, 51, 52]),
+    ("h", 6, [7, 61, 62]), ("h", 7, [7, 71, 72]),
+    ("h", 8, [None, None, 11]), ("h", 9, [None, None, 11]),
+]
+
+
+@pytest.mark.parametrize(
+    "rows, max_bucket",
+    [(_UNIQUE_KEYS, None), (_DUPLICATE_HEAVY, None), (_HOT_BUCKET, 3)],
+    ids=["unique", "duplicate_heavy", "hot_bucket"],
+)
+def test_band_pairs_matches_brute_force(spark, rows, max_bucket):
+    """band_pairs emits exactly the pairs that share a bucket surviving the
+    cap, each once (first-shared-band dedup, no .distinct())."""
+    from collections import Counter
     from itertools import combinations
 
-    from pmcanalysis_spark.operators.dedup import hamming_pairs
+    from pyspark.sql import functions as F
 
-    sigs = [(i, 0b1111000) for i in range(6)] + [(i, 0b1111001) for i in range(6, 10)]
-    df = spark.createDataFrame(sigs, "doc_id long, sig long")
-    got = {(r["a_id"], r["b_id"], r["hamming"])
-           for r in hamming_pairs(df, n_bits=64, max_hamming=2, bands=16).collect()}
-    exp = set()
-    for (a, sa), (b, sb) in combinations(sigs, 2):
-        h = bin(sa ^ sb).count("1")
-        if h <= 2:
-            exp.add((min(a, b), max(a, b), h))
-    assert got == exp and len(got) == len(exp)
+    from pmcanalysis_spark.operators.dedup import band_pairs
+
+    n = len(rows[0][2])
+    df = spark.createDataFrame(rows, "grp string, id long, keys array<long>")
+    got = [
+        (r["grp"], r["a_id"], r["b_id"])
+        for r in band_pairs(
+            df, "id", [F.col("keys")[j] for j in range(n)],
+            group_cols=["grp"], max_bucket=max_bucket,
+        ).collect()
+    ]
+    size = Counter((g, j, k[j]) for g, _, k in rows for j in range(n))
+
+    def shared(g, ka, kb):
+        return any(
+            ka[j] is not None and ka[j] == kb[j]
+            and (max_bucket is None or size[(g, j, ka[j])] <= max_bucket)
+            for j in range(n)
+        )
+
+    exp = {
+        (g, a, b)
+        for (g, a, ka), (h, b, kb) in combinations(sorted(rows), 2)
+        if g == h and shared(g, ka, kb)
+    }
+    assert len(got) == len(set(got))
+    assert set(got) == exp

@@ -130,6 +130,55 @@ def test_text_neardup_scalable_never_cartesian(spark):
         assert "_n_docs" in m.group(0), m.group(0)
 
 
+def test_band_pairs_self_join_reads_one_exchange(spark):
+    """The bucket self-join of ``band_pairs`` (under minhash_lsh_pairs and
+    the pair_scores mega-key path) never goes cartesian, and both of its
+    sides read the ONE user repartition on the full join key: the second
+    side is a ReusedExchange of it, and no join-inserted shuffle on the
+    bucket key sits on either side. Checked on the static plan (AQE and
+    broadcast off, so the sort-merge shape and exchange reuse are final)."""
+    from pmcanalysis_spark.canonicalize import pair_scores
+    from pmcanalysis_spark.operators.dedup import minhash_lsh_pairs
+    from pmcanalysis_spark.schemas import AUTHOR_RECORDS
+
+    mega = [
+        {"doc_id": f"M{d:03d}", "author_key": "j smith",
+         "coauthors": [f"co{d % 4}"], "mesh": [], "title_tokens": [],
+         "affiliation_tokens": [], "true_entity": None}
+        for d in range(24)
+    ]
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    cases = [
+        (minhash_lsh_pairs(docs, num_hashes=8, bands=4), 1),
+        # the record join and the profile replay
+        (pair_scores(spark.createDataFrame(mega, AUTHOR_RECORDS), max_group_size=10), 2),
+    ]
+    conf = {"spark.sql.adaptive.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        for df, n_joins in cases:
+            lines = _plan(df).splitlines()
+            assert not any("CartesianProduct" in ln for ln in lines)
+            joins = [ln for ln in lines
+                     if "SortMergeJoin" in ln and "_bk#" in ln.split("Inner")[0]]
+            bucket_ex = [ln for ln in lines
+                         if "Exchange hashpartitioning(" in ln and "_bk#" in ln
+                         and "ReusedExchange" not in ln]
+            reused = [ln for ln in lines
+                      if "ReusedExchange" in ln and "REPARTITION_BY_NUM" in ln
+                      and "_bk#" in ln]
+            assert len(joins) == n_joins, joins
+            assert len(bucket_ex) == n_joins, bucket_ex
+            assert all("REPARTITION_BY_NUM" in ln for ln in bucket_ex), bucket_ex
+            assert len(reused) == n_joins, reused
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
 def test_serving_lookup_pushes_term_filter(spark, tmp_path):
     """The point-lookup's IN-filter must reach the inverted-index parquet
     scan (PushedFilters: In(term_id, ...)) — the O(selected terms) cost
