@@ -7,14 +7,17 @@ from the last committed snapshot."
 In production these are Iceberg tables (atomic snapshot commits, partition
 stats in the manifest). This sandbox has no Iceberg runtime jar, so the same
 contract is implemented over Parquet directories plus a JSON manifest per
-stage — the write is made atomic the same way Iceberg's is (write to a temp
-location, fsync, rename the manifest last); swap ``format("parquet")`` for
-``format("iceberg")`` and the manifest for the catalog and nothing else
-changes shape.
+stage. The manifest is the commit point, as Iceberg's snapshot is: it is
+written to a temp file, fsynced and renamed last, and a stage directory
+without a committed manifest is discarded and rebuilt. Swap
+``format("parquet")`` for ``format("iceberg")`` and the manifest for the
+catalog and nothing else changes shape.
 
-Lineage rows are collected ON THE EXECUTORS during the write pass itself via
-``mapPartitions``-style instrumentation inside a ``mapInArrow`` no-op wrapper
-— no second scan of the data.
+Lineage rows come from a second pass after the data write:
+``partition_lineage`` re-reads the written parquet and groups it by the
+re-read's ``spark_partition_id()`` (its file splits, not the write tasks).
+The one ``wall_ms`` on every row is the driver-side time from the start of
+the stage until the data write returned.
 """
 
 from __future__ import annotations
@@ -88,9 +91,10 @@ def try_resume(
 
 
 def partition_lineage(df: DataFrame, key_col: str) -> DataFrame:
-    """Per-partition lineage rows computed in one pass over the data:
-    (partition_id, row_count, min_key, max_key). Used standalone when the
-    caller wants lineage without a full checkpoint."""
+    """Per-partition lineage rows computed in one pass over ``df``:
+    (partition_id, row_count, min_key, max_key), where partition_id is
+    ``df``'s own ``spark_partition_id()``. ``materialize_stage`` runs it
+    over the re-read of the parquet it just wrote."""
     return (
         df.select(F.spark_partition_id().alias("partition_id"), F.col(key_col))
         .groupBy("partition_id")
@@ -115,9 +119,11 @@ def materialize_stage(
     result). If a committed manifest with the same input fingerprint exists,
     SKIP the write and resume from the snapshot (north_rule resume path).
 
-    Lineage is written next to the data as ``<stage>_lineage`` parquet with
-    schema (stage, partition_id, row_count, min_key, max_key, wall_ms,
-    run_id).
+    Lineage is written as parquet to ``<base_dir>/<stage>/lineage``, beside
+    ``<stage>/data``, with columns (partition_id, row_count, min_key,
+    max_key, stage, run_id, wall_ms); see the module docstring for what a
+    partition and ``wall_ms`` are. The manifest's row_count and
+    n_partitions are read back from that table.
     """
     spark = df.sparkSession
     path = os.path.join(base_dir, stage)

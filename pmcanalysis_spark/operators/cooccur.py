@@ -63,15 +63,10 @@ def term_stats(dt: DataFrame) -> DataFrame:
     return dt.groupBy("term_id").agg(F.countDistinct("doc_id").alias("n"))
 
 
-def corpus_size(dt: DataFrame) -> int:
-    """|∪ docs(term)| — distinct docs mentioning any term (A3). Exact, to
-    match the reference (approx_count_distinct only for monitoring)."""
-    return dt.select("doc_id").distinct().count()
-
-
 def corpus_size_df(dt: DataFrame) -> DataFrame:
-    """corpus_size as a 1-row DataFrame (column ``t``) for use as a
-    broadcast scalar inside the scoring job — saves one blocking job."""
+    """|∪ docs(term)| — distinct docs mentioning any term (A3), exact to
+    match the reference — as a 1-row DataFrame (column ``t``) for use as a
+    broadcast scalar inside the scoring job, not a driver-blocking count."""
     return dt.agg(F.countDistinct("doc_id").alias("t"))
 
 
@@ -118,29 +113,6 @@ def pair_counts(
         partial = salted.groupBy("a_id", "b_id", "_salt").agg(F.count("*").alias("_c"))
         return partial.groupBy("a_id", "b_id").agg(F.sum("_c").alias("nab"))
     return joined.groupBy("a_id", "b_id").agg(F.count("*").alias("nab"))
-
-
-def materialize_bucketed_doc_terms(
-    dt: DataFrame, table: str = "doc_terms_bucketed", buckets: int = 64
-) -> DataFrame:
-    """Write doc_terms bucketed+sorted by doc_id and return the table.
-
-    The J4 self-join on a bucketed table is exchange-free: both sides are
-    already hash-partitioned on the join key at rest, so Catalyst plans a
-    SortMergeJoin with ZERO shuffles (the 100 TB co-location play — the
-    shuffle cost moves into the one-time write and is amortized over every
-    downstream pair family / re-run). Bucket count should match the target
-    parallelism granularity (64 here; thousands on a real cluster).
-    """
-    spark = dt.sparkSession
-    (
-        dt.write.mode("overwrite")
-        .bucketBy(buckets, "doc_id")
-        .sortBy("doc_id")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-    return spark.table(table)
 
 
 def scored_pairs(

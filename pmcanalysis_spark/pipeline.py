@@ -14,7 +14,7 @@ NaN-filter fixed (P6), and all-candidate entity links preserved (J1).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,8 +38,6 @@ class PipelineConfig:
     b_prefixes: tuple[str, ...] = ("HP:", "MP:")
     pred: str = "has-phenotype"
     min_name_len: int = MINLENGTH
-    salt_buckets: int = 0
-    extra: dict = field(default_factory=dict)
 
 
 def ingest(web_pages: DataFrame, range_partitions: int | None = None) -> DataFrame:
@@ -74,6 +72,18 @@ def build_mentions(
     return detect_mentions(extracted, lexicon_entries, cfg.min_name_len)
 
 
+def ancestor_map(hierarchy: DataFrame | None) -> dict[str, tuple[str, ...]] | None:
+    """Collect the (small) closure table to ``{term_id: sorted ancestor
+    ids}``, the form ``detect_doc_terms(ancestors=)`` broadcasts; None
+    without a hierarchy."""
+    if hierarchy is None:
+        return None
+    anc: dict[str, set[str]] = {}
+    for r in hierarchy.select("term_id", "ancestor_id").collect():
+        anc.setdefault(r["term_id"], set()).add(r["ancestor_id"])
+    return {k: tuple(sorted(v)) for k, v in anc.items()}
+
+
 def build_triples(
     web_pages: DataFrame,
     lexicon_entries: list[tuple[str, str]],
@@ -101,12 +111,6 @@ def build_triples(
     else:
         # hierarchy closure folds into the scan as a per-doc ancestor
         # expansion (the closure table is small: collect once, broadcast)
-        anc: dict[str, tuple[str, ...]] | None = None
-        if hierarchy is not None:
-            anc_map: dict[str, set[str]] = {}
-            for r in hierarchy.select("term_id", "ancestor_id").collect():
-                anc_map.setdefault(r["term_id"], set()).add(r["ancestor_id"])
-            anc = {k: tuple(sorted(v)) for k, v in anc_map.items()}
         # already distinct: the UDF dedupes per doc and urls are unique in
         # the input (input_hint key) — no global distinct shuffle needed
         dt = detect_doc_terms(
@@ -114,7 +118,7 @@ def build_triples(
             lexicon_entries,
             lang=cfg.lang,
             min_name_len=cfg.min_name_len,
-            ancestors=anc,
+            ancestors=ancestor_map(hierarchy),
         )
     return triples_from_doc_terms(dt, cfg=cfg, assume_distinct=True)
 
@@ -147,8 +151,5 @@ def triples_from_doc_terms(
     # all b families in ONE self-join (OR of prefixes) — one shuffle of dt,
     # not one per family; corpus size rides along as a broadcast scalar so
     # the whole score stage is ONE job; caller materializes (write/count)
-    pairs = pair_counts(
-        dt, a_prefix=cfg.a_prefix, b_prefix=cfg.b_prefixes,
-        salt_buckets=cfg.salt_buckets,
-    )
+    pairs = pair_counts(dt, a_prefix=cfg.a_prefix, b_prefix=cfg.b_prefixes)
     return scored_pairs(pairs, stats, total_df, pred=cfg.pred)

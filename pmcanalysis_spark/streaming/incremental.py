@@ -19,19 +19,22 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from ..pipeline import PipelineConfig, triples_from_doc_terms
-from .ingest import read_web_pages_stream
+from ..pipeline import PipelineConfig, ancestor_map, triples_from_doc_terms
+from ..schemas import WEB_PAGES
 
 
-def _ancestor_map(hierarchy) -> dict[str, tuple[str, ...]] | None:
-    if hierarchy is None:
-        return None
-    anc: dict[str, set[str]] = {}
-    for r in hierarchy.select("term_id", "ancestor_id").collect():
-        anc.setdefault(r["term_id"], set()).add(r["ancestor_id"])
-    return {k: tuple(sorted(v)) for k, v in anc.items()}
+def read_web_pages_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over a directory of web-page parquet drops, on the
+    batch scan's web_pages schema. In production: ``readStream.format(
+    "iceberg")`` on the same table."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(WEB_PAGES)
+        .option("maxFilesPerTrigger", 16)
+        .load(path)
+    )
 
 
 def _snapshot_fingerprint(spark: SparkSession, path: str) -> str:
@@ -70,7 +73,7 @@ def run_incremental_kg(
         lexicon_entries,
         lang=cfg.lang,
         min_name_len=cfg.min_name_len,
-        ancestors=_ancestor_map(hierarchy),
+        ancestors=ancestor_map(hierarchy),
     )
     q = (
         dt_stream.writeStream.format("parquet")

@@ -796,6 +796,39 @@ def test_line_dedup_partition_invariance(spark):
     assert one == many
 
 
+def test_apply_line_cut_consumes_materialized_common_set(spark):
+    """Detect-once / cut-many: a materialized line_key table built by
+    common_lines drives apply_line_cut through a broadcast join, and the
+    result equals the one-shot batch line_dedup."""
+    from pmcanalysis_spark.operators.dedup import apply_line_cut, common_lines, line_dedup
+
+    nav = "Home | About | Contact"
+    cookie = "Accept Cookies"
+    rows = [
+        (1, f"{nav}\nalpha article body\n{cookie}"),
+        (2, f"{nav}\nbeta article body"),
+        (3, f"{cookie}\ngamma article body"),
+        (4, "echo\necho\necho\ndelta body"),  # within-doc repeats: one doc
+        (5, f"{nav}\n{cookie}\nepsilon body"),
+        (6, "echo\nzeta body"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    keys = [r.line_key for r in common_lines(docs, min_docs=2).collect()]
+    assert sorted(keys) == sorted([nav.lower(), cookie.lower(), "echo"])
+    common = spark.createDataFrame([(k,) for k in keys], "line_key string")
+    via_artifact = {
+        r.doc_id: (r.n_lines, r.n_removed, r.text)
+        for r in apply_line_cut(docs, common).collect()
+    }
+    via_batch = {
+        r.doc_id: (r.n_lines, r.n_removed, r.text)
+        for r in line_dedup(docs, min_docs=2).collect()
+    }
+    assert via_artifact == via_batch
+    plan = apply_line_cut(docs, common)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+
+
 def test_semantic_decontaminate_flags_planted_paraphrases(spark):
     """An eval vector's scaled near-copy (no shared tokens needed) is
     flagged; an orthogonal vector is not; numpy and sql impls agree

@@ -96,24 +96,6 @@ def test_vocab_build_and_encode(spark):
     assert enc[3] == "0,1"        # zzz OOV, order preserved
 
 
-def test_compression_ratio(spark):
-    import zlib
-
-    from pmcanalysis_spark.operators.textstats import compression_ratio
-
-    rows = [
-        (1, "aaaa " * 200),                       # degenerate: compresses hard
-        (2, "the quick brown fox jumps over it"), # short prose
-        (3, ""),                                  # empty: ratio guarded
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in compression_ratio(docs).collect()}
-    assert got[1].ratio < 0.05                    # repetition flagged
-    assert got[2].n_compressed == len(zlib.compress(rows[1][1].encode(), 6))
-    assert got[3].n_bytes == 0 and got[3].n_compressed >= 0
-    assert abs(got[1].ratio - round(got[1].n_compressed / got[1].n_bytes, 6)) < 1e-12
-
-
 def test_pack_sequences_manifest(spark):
     """Known layout: docs of 3/4/2 tokens at seq_len=5 concat to 9 tokens ->
     chunk 0 holds d1 fully + d2 partially (5 tokens), chunk 1 the rest."""
@@ -631,3 +613,36 @@ def test_dsir_weights_partition_invariance(spark):
         for r in dsir_weights(docs.repartition(13), tgt, n_buckets=64).collect()
     }
     assert one == many
+
+
+def test_keep_filter_runs_on_stream(spark, tmp_path):
+    """keep_filter is a single narrow select, so it is stream-safe by
+    construction: the same operator object runs unchanged on a file stream
+    and emits batch-identical rows across micro-batches."""
+    from pmcanalysis_spark.operators.textstats import keep_filter
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    src = str(tmp_path / "kf_in")
+    rows = docs.collect()
+    half = len(rows) // 2
+    schema = docs.schema
+    spark.createDataFrame(rows[:half], schema).coalesce(1).write.parquet(src + "/b=0")
+    spark.createDataFrame(rows[half:], schema).coalesce(1).write.parquet(src + "/b=1")
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/b=*")
+    )
+    q = (
+        keep_filter(stream)
+        .writeStream.format("memory")
+        .queryName("kf_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = {tuple(r) for r in spark.sql("select * from kf_stream").collect()}
+    exp = {tuple(r) for r in keep_filter(docs).collect()}
+    assert got == exp and len(got) == len(rows)
